@@ -522,15 +522,12 @@ def main() -> None:
     warm.groupBy("l_returnflag").count().count()
     # Python-worker pool prewarm (r9, SIM_PROBE.json: fork + numpy/pandas
     # import across up to 32 workers was the named cause of the historical
-    # cosine_near_dup 3-10x single-shot outliers) now lives in get_spark
-    # itself (VERDICT r09 #3 — session.prewarm_python_workers, default on
-    # for local masters), so every consumer gets steady-state first-query
-    # latency, not just the bench. SPARK_GRAFT_NO_PREWARM=1 still skips it
-    # there — the diagnostic escape hatch for A/B-ing the pool's
-    # session-wide cost (32 resident workers ≈ 4 GB RSS). The call below is
-    # a no-op when get_spark already ran it; it exists so the bench stays
-    # prewarmed even under a future default change — and it must honor the
-    # SAME env gate, or the diagnostic flag would silently measure the
+    # cosine_near_dup 3-10x single-shot outliers). get_spark warms only the
+    # JVM; the registry runs Pandas UDFs, so the bench grows the pool here,
+    # before any timed draw. SPARK_GRAFT_NO_PREWARM=1 skips it — the
+    # diagnostic escape hatch for A/B-ing the pool's session-wide cost (32
+    # resident workers ≈ 4 GB RSS) — and it must honor the SAME env gate as
+    # get_spark, or the diagnostic flag would silently measure the
     # prewarmed configuration anyway.
     if not os.environ.get("SPARK_GRAFT_NO_PREWARM"):
         prewarm_python_workers(spark)

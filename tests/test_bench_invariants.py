@@ -324,3 +324,19 @@ def test_resolve_cpus_honors_env(monkeypatch):
     assert f"local[{resolve_cpus()}]" == "local[8]"
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert resolve_cpus(4) == 4
+
+
+def test_resolve_driver_memory_is_half_of_physical_memory(monkeypatch):
+    # default heap: half of physical memory in whole GB, within [1g, 16g];
+    # $SPARK_GRAFT_DRIVER_MEM wins whenever it is set
+    from weather_data_pipeline_spark.session import resolve_driver_memory
+
+    gb = 2**30
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert resolve_driver_memory(int(15.7 * gb)) == "7g"
+    assert resolve_driver_memory(16 * gb) == "8g"
+    assert resolve_driver_memory(64 * gb) == "16g"
+    assert resolve_driver_memory(gb) == "1g"
+    assert 1 <= int(resolve_driver_memory()[:-1]) <= 16
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert resolve_driver_memory(64 * gb) == "3g"

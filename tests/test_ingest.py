@@ -157,6 +157,45 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
     assert got2 == got
 
 
+def test_load_table_reads_fresh_rows_after_partitioned_upsert(spark, tmp_path):
+    """The per-session table memo must not hand back a frame whose plan
+    lists files an upsert has since replaced (FILE_NOT_EXIST on read), and
+    must still return the very same frame while the table is unchanged."""
+    from weather_data_pipeline_spark.sources.tables import load_table
+
+    table_dir = str(tmp_path)
+    path = str(tmp_path / "weather.parquet")
+
+    def mk(rows):
+        return spark.createDataFrame(
+            rows,
+            "city string, timestamp string, temperature double, created_at string",
+        ).select(
+            "city",
+            F.to_timestamp("timestamp").alias("timestamp"),
+            "temperature",
+            F.to_timestamp("created_at").alias("created_at"),
+        )
+
+    def read(df):
+        return {(r.city, str(r.timestamp)): r.temperature for r in df.collect()}
+
+    WI.upsert_parquet_partitioned(
+        mk([("a", "2024-01-01 00:00:00", 1.0, "2024-01-01 01:00:00")]), path
+    )
+    first = load_table(spark, table_dir, "weather")
+    assert read(first) == {("a", "2024-01-01 00:00:00"): 1.0}
+    assert load_table(spark, table_dir, "weather") is first
+
+    # revise the key: the merge rewrites the 2024-01-01 partition's files
+    WI.upsert_parquet_partitioned(
+        mk([("a", "2024-01-01 00:00:00", 9.0, "2024-01-01 02:00:00")]), path
+    )
+    second = load_table(spark, table_dir, "weather")
+    assert read(second) == {("a", "2024-01-01 00:00:00"): 9.0}
+    assert load_table(spark, table_dir, "weather") is second
+
+
 class _Boom(Exception):
     def __init__(self, status=None):
         self.status_code = status

@@ -1,32 +1,80 @@
-"""Session-level Python worker-pool prewarm (VERDICT r09 #3).
+"""What session start warms, and the explicit worker-pool prewarm.
 
-The pool cold start — fork + numpy/pandas import across up to 32 workers —
-was root-caused (SIM_PROBE.json) as the only source of the historical 3-18 s
-Pandas-UDF first-draw outliers. get_spark now runs the prewarm by default for
-local masters so ANY consumer's first wide python-task query starts from
-steady state, not just the bench. The fresh-process first-draw evidence is
-PREWARM_PROBE.json (captured via get_spark only, no bench warmups).
+get_spark warms the JVM once per application on local masters but starts
+no Python worker: the pool (a ~3 s job plus ~120 MB resident per daemon)
+is pure cost for a session that runs no Pandas UDF. Callers about to run
+Pandas UDFs call prewarm_python_workers, at most once per application.
+The fresh-process first-draw evidence is PREWARM_PROBE.json (captured via
+get_spark only, no bench warmups).
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
 from weather_data_pipeline_spark import session as S
 
+# Runs in a fresh process: the shared fixture session may already have run
+# Pandas UDFs, so its worker pool says nothing about what get_spark starts.
+_SCRIPT = r"""
+import sys
+sys.path.insert(0, @REPO@)
+from perfbench.procs import descendants
+from weather_data_pipeline_spark import session as S
 
-@pytest.mark.skipif(
-    bool(os.environ.get("SPARK_GRAFT_NO_PREWARM")),
-    reason="prewarm disabled by env for this run",
-)
-def test_get_spark_prewarms_local_session_once(spark):
-    # the session fixture built `spark` through get_spark with the default
-    # env, so the pool prewarm must already have run for this application
-    assert spark.sparkContext.applicationId in S._PREWARMED
-    # once per session: a second explicit call is a no-op
-    assert S.prewarm_python_workers(spark) is False
+
+def daemons():
+    # Python processes below this driver: the pyspark.daemon and the
+    # workers it forks (children of the JVM, itself a child of this one)
+    return [p for p, (comm, _) in descendants().items() if comm.startswith("python")]
+
+
+warms = []
+real_warm = S._warm_jvm_infra
+S._warm_jvm_infra = lambda spark: (warms.append(1), real_warm(spark))
+spark = S.get_spark("wdp-prewarm-test", cpus=2)
+app = spark.sparkContext.applicationId
+print("JVM_WARMS_1", len(warms), (app, "jvm") in S._PREWARMED)
+assert S.get_spark("wdp-prewarm-test", cpus=2) is spark
+print("JVM_WARMS_2", len(warms))
+print("DAEMONS_AFTER_GET_SPARK", len(daemons()))
+print("POOL_1", S.prewarm_python_workers(spark))
+print("DAEMONS_AFTER_POOL", len(daemons()))
+print("POOL_2", S.prewarm_python_workers(spark))
+spark.stop()
+"""
+
+
+def test_get_spark_warms_jvm_once_and_starts_no_python_workers():
+    repo_root = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_NO_PREWARM"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _SCRIPT.replace("@REPO@", repr(repo_root))],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = dict(
+        line.split(" ", 1) for line in proc.stdout.splitlines() if " " in line
+    )
+    # the JVM warm-up ran once, and a second get_spark did not repeat it
+    assert out["JVM_WARMS_1"] == "1 True"
+    assert out["JVM_WARMS_2"] == "1"
+    # session start forked no Python worker ...
+    assert out["DAEMONS_AFTER_GET_SPARK"] == "0"
+    # ... the explicit prewarm does (so the count above can see daemons),
+    # and it runs at most once per application
+    assert out["POOL_1"] == "True"
+    assert int(out["DAEMONS_AFTER_POOL"]) > 0
+    assert out["POOL_2"] == "False"
 
 
 # --- first-draw bound (VERDICT r10 #3) --------------------------------------

@@ -48,9 +48,9 @@ def main() -> None:
     warm.groupBy("l_returnflag").count().count()
     # and the Python-worker pool prewarm (r9, SIM_PROBE.json: worker cold
     # start — fork + numpy/pandas import x32 — is the named cause of the
-    # historical Pandas-UDF first-draw outliers); get_spark runs it by
-    # default for local masters (r10), this is a no-op safety net that must
-    # honor the same SPARK_GRAFT_NO_PREWARM diagnostic gate
+    # historical Pandas-UDF first-draw outliers); get_spark does not start
+    # the pool, so it runs here, under the same SPARK_GRAFT_NO_PREWARM
+    # diagnostic gate
     if not os.environ.get("SPARK_GRAFT_NO_PREWARM"):
         prewarm_python_workers(spark)
 

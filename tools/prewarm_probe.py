@@ -1,18 +1,19 @@
 #!/usr/bin/env python3
-"""Fresh-session first-draw probe for the session-level worker-pool prewarm
-(VERDICT r09 #3 "done" evidence): build a session through get_spark ONLY —
-no bench warmups — and time N consecutive draws of a Pandas-UDF-heavy query.
-Historically (no prewarm) the first draw paid the pool cold start: fork +
-numpy/pandas import across up to 32 workers, 3-10x the steady median
-(SIM_PROBE.json). With get_spark's default prewarm the first draw must stay
-under 3x the median of the later draws.
+"""Fresh-session first-draw probe: build a session through get_spark ONLY —
+no bench warmups, no explicit worker-pool prewarm — and time N consecutive
+draws of a Pandas-UDF-heavy query. get_spark warms the JVM (codegen,
+shuffle, checkpoint and parquet class-loading) but does not start the
+Python worker pool, so the first draw pays the pool fork plus numpy/pandas
+import across the session's workers, and the query's own codegen. It must
+stay under 3x the median of the later draws; without the JVM warm-up it
+does not (4.4-4.5x measured).
 
     python tools/prewarm_probe.py [--query cosine_near_dup_embeddings]
         [--draws 6] [--out PREWARM_PROBE.json]
 
-Note the first draw still legitimately carries whole-stage-codegen compile
-for the query plan itself (~1-2x) — the 3x gate separates that from the
-pool-spawn transient it replaces.
+`session_prewarmed_by_get_spark` in the artifact records whether get_spark
+ran its JVM warm-up for this session; it says nothing about the worker
+pool, which no session start prewarms.
 
 VERDICT r10 #3: the probe is a GATE — session.prewarm_first_draw_verdict
 (pytest-pinned rule) stamps a passed/failed verdict into the artifact and
@@ -51,7 +52,7 @@ def main() -> None:
 
     load0 = [round(v, 2) for v in os.getloadavg()]
     spark = get_spark("wdp-prewarm-probe")
-    prewarmed = spark.sparkContext.applicationId in _PREWARMED
+    prewarmed = (spark.sparkContext.applicationId, "jvm") in _PREWARMED
     q = REGISTRY[args.query]
     draws: list[float] = []
     for i in range(args.draws):
@@ -67,6 +68,10 @@ def main() -> None:
         "query": args.query,
         "sf_dir": args.sf_dir,
         "session_prewarmed_by_get_spark": prewarmed,
+        "note": (
+            "session_prewarmed_by_get_spark covers get_spark's JVM warm-up "
+            "only; the Python worker pool starts inside the first draw"
+        ),
         "no_prewarm_env": bool(os.environ.get("SPARK_GRAFT_NO_PREWARM")),
         "draws": draws,
         "first_draw": draws[0],

@@ -70,7 +70,7 @@ def literal_df(spark: SparkSession, rows: Sequence, ddl: str) -> DataFrame:
     # Accept both DDL field forms ("a int" and "a:int") when deriving the
     # pandas column names (ADVICE r11: the old space-only split would name a
     # colon-form column "a:int" and build a mismatched frame).
-    names = [re.split(r"[:\s]", part, 1)[0] for part in _split_ddl(ddl)]
+    names = [re.split(r"[:\s]", part, maxsplit=1)[0] for part in _split_ddl(ddl)]
     # dtype=object: pandas must not infer (None in an int column would
     # become NaN-float before Arrow sees it); the Arrow converter applies
     # the DDL type per field from the object cells directly

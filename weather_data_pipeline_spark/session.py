@@ -35,6 +35,20 @@ def resolve_cpus(cpus: int | None = None) -> int:
     return cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 
 
+def resolve_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default driver heap: $SPARK_GRAFT_DRIVER_MEM when set, otherwise half
+    of physical memory in whole GB, between 1g and 16g. A fixed 16g is more
+    than a 15 GB host has, and with it the JVM's resident size drifted with
+    lazy GC. ``phys_bytes`` defaults to SC_PHYS_PAGES x SC_PAGE_SIZE; pure
+    so the rule is pinned without a session."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, phys_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "weather_data_pipeline_spark",
     cpus: int | None = None,
@@ -47,6 +61,15 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` should be ~2-3× total cores (or left to
     AQE coalescing, which is enabled here). Locally we match the core count so
     tiny test data isn't over-parallelized.
+
+    Session-wide settings worth knowing: the Arrow fallback to the pickled
+    path is DISABLED (``arrow.pyspark.fallback.enabled=false``), so a failed
+    Arrow conversion raises instead of silently running Python workers; the
+    driver heap is ``resolve_driver_memory()`` (half of physical memory, at
+    most 16g, unless $SPARK_GRAFT_DRIVER_MEM is set); and on a local master
+    session start warms the JVM once per application (``_warm_jvm_infra``).
+    It does NOT start the Python worker pool: callers about to run Pandas
+    UDFs call ``prewarm_python_workers`` themselves.
     """
     cpus = resolve_cpus(cpus)
     shuffle_partitions = shuffle_partitions or cpus
@@ -66,7 +89,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", resolve_driver_memory())
     )
     # Only force a master when none is configured (spark-submit on a cluster
     # sets it; local runs default to local[cpus]).
@@ -88,34 +111,31 @@ def get_spark(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Python-worker pool prewarm (VERDICT r09 #3): without it, the FIRST
-    # wide python-task query of a fresh local session pays the pool's cold
-    # start — fork + numpy/pandas import across up to N workers, measured
-    # 4-6 s idle / 10-18 s under load (SIM_PROBE.json root-caused this as
-    # the only source of the historical cosine_near_dup 3-18 s outliers).
-    # Default ON for local masters so any consumer's first query matches
-    # steady state, not just the bench; cost is one trivial full-width
-    # mapInPandas at session build (~1-2 s) plus ~4 GB RSS of resident
-    # workers at local[32]. SPARK_GRAFT_NO_PREWARM=1 disables. On a real
-    # cluster (non-local master) long-lived executors amortize the
-    # transient across the app, so the default is OFF there;
-    # SPARK_GRAFT_PREWARM=1 forces it on.
-    if not os.environ.get("SPARK_GRAFT_NO_PREWARM") and (
-        spark.sparkContext.master.startswith("local")
-        or os.environ.get("SPARK_GRAFT_PREWARM")
+    # JVM warm-up, once per application: codegen, shuffle, checkpoint and
+    # parquet class-loading that a fresh session's first query would
+    # otherwise pay (without it the first Pandas-UDF draw ran 4.4-4.5x the
+    # steady median). The Python worker pool is NOT prewarmed here: it
+    # costs a ~3 s job plus ~120 MB resident per daemon, and a session that
+    # runs no Pandas UDF (collector, feature batch, dashboard) never uses
+    # it. Cluster executors are long-lived and amortize this, so local
+    # only; SPARK_GRAFT_NO_PREWARM=1 disables it.
+    jvm_key = (spark.sparkContext.applicationId, "jvm")
+    if (
+        not os.environ.get("SPARK_GRAFT_NO_PREWARM")
+        and spark.sparkContext.master.startswith("local")
+        and jvm_key not in _PREWARMED
     ):
-        # best-effort: the prewarm is an optimization, and session BUILD
-        # must not fail because of it (e.g. the parquet round-trip in a
-        # read-only / full-tmp environment)
+        _PREWARMED.add(jvm_key)
+        # best-effort: session BUILD must not fail because of the warm-up
+        # (e.g. the parquet round-trip in a read-only / full-tmp environment)
         try:
-            prewarm_python_workers(spark)
+            _warm_jvm_infra(spark)
         except Exception as exc:  # pragma: no cover - environment-specific
             import sys
 
             print(
-                f"get_spark: worker-pool prewarm failed ({exc!r}); "
-                "continuing without it — first wide Pandas-UDF query will "
-                "pay the pool cold start",
+                f"get_spark: JVM warm-up failed ({exc!r}); continuing without "
+                "it — the first query pays the class-loading",
                 file=sys.stderr,
             )
     return spark
@@ -142,18 +162,21 @@ def _warm_jvm_infra(spark: SparkSession) -> None:
         spark.read.parquet(p).where("id > 1").count()
 
 
-# applicationIds whose worker pool this process already grew to full width —
-# getOrCreate() hands the same session back to every get_spark call, and the
-# prewarm job must run once per session, not once per call
+# Prewarm steps this process already attempted, each at most once per
+# application: getOrCreate() hands the same session back to every get_spark
+# call. get_spark's JVM warm-up is keyed (applicationId, "jvm"); the
+# explicit worker-pool prewarm by the bare applicationId.
 _PREWARMED: set = set()
 
-# post-prewarm first-draw bound (VERDICT r10 #3): with the session prewarm
-# in place, a fresh session's FIRST wide Pandas-UDF draw carries only
-# query-specific codegen compile — measured 2.24x the steady median
-# (PREWARM_PROBE.json). Past this factor the pool cold start is back (e.g.
-# a prewarm bypass regression like the SPARK_GRAFT_NO_PREWARM leak the r10
-# self-review caught), and the probe must fail red instead of surfacing as
-# bench mystery-outliers rounds later.
+# first-draw bound (VERDICT r10 #3): with get_spark's JVM warm-up in place,
+# a fresh session's FIRST wide Pandas-UDF draw carries the worker-pool fork
+# plus query-specific codegen compile — 2.5-3.0x the steady median in 9 of
+# 11 fresh local[4] probes, 3.04x and 3.46x in the other two
+# (PREWARM_PROBE.json; 1.9-2.2x when session start also forked the pool).
+# Without the JVM warm-up it measured 4.4-4.5x. Past this factor a warm-up
+# bypass regression (like the SPARK_GRAFT_NO_PREWARM leak the r10
+# self-review caught) is back, and the probe must fail red instead of
+# surfacing as bench mystery-outliers rounds later.
 PREWARM_FIRST_DRAW_MAX_X = 3.0
 
 
@@ -188,7 +211,8 @@ def prewarm_first_draw_verdict(draws: list) -> dict:
 def prewarm_python_workers(spark: SparkSession, partitions: int | None = None) -> bool:
     """Grow the session's Python worker pool to full width, once.
 
-    One trivial ``mapInPandas`` over ``partitions`` (default
+    For callers about to run Pandas UDFs (get_spark does not call it). One
+    trivial ``mapInPandas`` over ``partitions`` (default
     ``defaultParallelism``) partitions forks every daemon worker the session
     will ever run concurrently and warms their numpy/pandas imports; the pool
     persists (reuse on, no idle timeout), so every later Pandas-UDF query
@@ -196,20 +220,13 @@ def prewarm_python_workers(spark: SparkSession, partitions: int | None = None) -
     (successfully or not), False when this session was already attempted.
 
     At-most-once per session INCLUDING failures (ADVICE r10): the session is
-    marked attempted BEFORE the jobs run, so a persistently broken
-    environment pays the failing prewarm (and get_spark's warning) once,
-    not multi-seconds on every later get_spark() call against the same
-    live session."""
+    marked attempted BEFORE the job runs, so a persistently broken
+    environment pays the failing prewarm once, not on every later call
+    against the same live session."""
     app = spark.sparkContext.applicationId
     if app in _PREWARMED:
         return False
     _PREWARMED.add(app)
-    try:
-        _warm_jvm_infra(spark)
-    except Exception:
-        # opportunistic (e.g. the parquet round-trip in a read-only temp
-        # env); the pool prewarm below is the load-bearing part — run it
-        pass
     par = partitions or spark.sparkContext.defaultParallelism
 
     def _prewarm(batches):

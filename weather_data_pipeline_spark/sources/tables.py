@@ -30,12 +30,33 @@ NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # pass for frames that are bit-identical every time. DataFrames are
 # immutable, so handing the same lazy plan object back is semantically a
 # no-op: no data or results are cached, every action still scans parquet.
-# Keyed by applicationId (a restarted session rebuilds); the one trade is
-# that the plan pins its file listing at first build — correct for
-# immutable fixture files, and the same property _FPW_PLAN_MEMO already
-# has. Cleared wholesale if test churn grows the map (bounded driver-side
-# plan objects, same policy as _FPW_PLAN_MEMO).
+# Keyed by applicationId (a restarted session rebuilds). A frame's plan
+# pins the file listing it was built from, so each entry stores it with
+# the table's `_table_fingerprint`, and a rewritten table (an upsert
+# replacing partition files) is rebuilt on the next load instead of
+# scanning files that are gone. Cleared wholesale if test churn grows the
+# map (bounded driver-side plan objects, same policy as _FPW_PLAN_MEMO).
 _TABLE_MEMO: dict = {}
+
+
+def _table_fingerprint(path: str) -> tuple:
+    """Sorted (path, size, mtime_ns) of every file under a table directory,
+    or of the path itself when it is one file: a driver-side stat that
+    changes whenever a file is written, replaced or removed."""
+    import os
+
+    if os.path.isdir(path):
+        paths = [os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs]
+    else:
+        paths = [path]
+    out = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:  # absent, or removed mid-walk: a later load sees it
+            continue
+        out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -45,15 +66,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import os
 
     key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
-    df = _TABLE_MEMO.get(key)
-    if df is None:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-        if len(_TABLE_MEMO) > 64:
-            _TABLE_MEMO.clear()
-        _TABLE_MEMO[key] = df
+    fingerprint = _table_fingerprint(f"{sf_dir}/{name}.parquet")
+    hit = _TABLE_MEMO.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    if name == "events":
+        df = load_events(spark, sf_dir)
+    else:
+        df = _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    if len(_TABLE_MEMO) > 64:
+        _TABLE_MEMO.clear()
+    _TABLE_MEMO[key] = (fingerprint, df)
     return df
 
 
