@@ -458,12 +458,12 @@ SESSION_CACHED = {
 }
 
 # Queries whose registered callable memoizes its CONSTRUCTED PLAN per
-# (session, sf_dir) — feature_pipeline_weather's _FPW_PLAN_MEMO holds the
-# ~1.7 s of py4j plan building AND the eager label-encode vocab-fit job
-# (a real data-scanning Spark job that runs at construction time). Best-of-3
-# would time the warm memo on draws 2-3 and skip that job — the same
-# warm-redraw hazard the SESSION_CACHED/HEADLINE disjointness assert exists
-# to prevent (ADVICE r08). These stay in HEADLINE (the flagship must stay
+# session (session_cache.memo) — feature_pipeline_weather's memoized plan
+# holds the ~1.7 s of py4j plan building AND the eager label-encode
+# vocab-fit job (a real data-scanning Spark job that runs at construction
+# time). Best-of-3 would time the warm memo on draws 2-3 and skip that job
+# — the same warm-redraw hazard the SESSION_CACHED/HEADLINE disjointness
+# assert exists to prevent. These stay in HEADLINE (the flagship must stay
 # round-over-round visible) but are measured FIRST-DRAW ONLY,
 # build-inclusive, and exempted from the outlier re-draw pass.
 MEMOIZED_PLAN = {"feature_pipeline_weather"}

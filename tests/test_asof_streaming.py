@@ -356,21 +356,25 @@ def test_quantizer_fits_survive_duplicate_heavy_sampled_corpus(spark):
 
 
 def test_coarse_model_session_share_is_fit_identical(spark, sf_dir):
-    """r11 optimization: ann_ivf_topk and ivf_pq_adc_topk share one fitted
-    coarse quantizer per (session, cache_tag). The cached model must be
-    bit-identical to a fresh per-call fit — cluster centers equal, and the
-    cached-path ivf_topk output equal to the uncached-path output — and a
-    different cache_tag (or tag=None) must never serve a stale model."""
+    """ann_ivf_topk and ivf_pq_adc_topk share one fitted coarse quantizer
+    per (session, cache_tag). The cached model must be bit-identical to a
+    fresh per-call fit — cluster centers equal, and the cached-path
+    ivf_topk output equal to the uncached-path output — and a different
+    cache_tag (or tag=None) must never serve a stale model."""
     import numpy as np
 
+    from weather_data_pipeline_spark import session_cache as SC
     from weather_data_pipeline_spark.operators import similarity as S
     from weather_data_pipeline_spark.sources.tables import load_table
 
+    def coarse_entries():
+        return [k for k in SC._ENTRIES if k[0] == "coarse_model"]
+
     emb = load_table(spark, sf_dir, "embeddings")
-    S._COARSE_MODEL_CACHE.clear()
+    SC.clear()
 
     fresh = S._coarse_model(emb, "embedding", 8, 42, cache_tag=None)
-    assert not S._COARSE_MODEL_CACHE  # tag=None never populates
+    assert not coarse_entries()  # tag=None never populates
     first = S._coarse_model(emb, "embedding", 8, 42, cache_tag="t1")
     cached = S._coarse_model(emb, "embedding", 8, 42, cache_tag="t1")
     assert cached is first  # second call is a cache hit
@@ -381,12 +385,13 @@ def test_coarse_model_session_share_is_fit_identical(spark, sf_dir):
     # a different tag re-fits (single-entry: key mismatch -> fresh fit)
     other = S._coarse_model(emb, "embedding", 8, 42, cache_tag="t2")
     assert other is not first
+    assert len(coarse_entries()) == 1
     assert np.array_equal(
         np.array(other.clusterCenters()), np.array(first.clusterCenters())
     )
 
     # end-to-end: cached-path ivf_topk == uncached-path ivf_topk
-    S._COARSE_MODEL_CACHE.clear()
+    SC.clear()
     plain = [
         tuple(r)
         for r in S.ivf_topk(emb, [0, 1, 2], k=5, n_centroids=8).collect()
@@ -404,4 +409,4 @@ def test_coarse_model_session_share_is_fit_identical(spark, sf_dir):
         ).collect()
     ]
     assert plain == tagged1 == tagged2
-    S._COARSE_MODEL_CACHE.clear()
+    SC.clear()

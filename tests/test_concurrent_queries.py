@@ -2,12 +2,12 @@
 
 A long-lived engine behind a Thrift server or notebook scheduler runs
 queries from multiple threads against one SparkSession. The process-global
-caches (`similarity._PREV_CAND`, `graph._RELIABLE`, the single-entry ML
-caches) previously assumed sequential consumption — a concurrent pair of
-same-operator calls could free each other's candidate checkpoint blocks
-mid-query (localCheckpoint truncates lineage: freed blocks CANNOT be
-recomputed, the job dies). These tests pin the round-6 fix: per-thread
-keying + locks, thread-local reliable mode.
+caches (`similarity._PREV_CAND`, `graph._RELIABLE`, the leased entries
+of `session_cache`) previously assumed sequential consumption — a
+concurrent pair of same-operator calls could free each other's candidate
+checkpoint blocks mid-query (localCheckpoint truncates lineage: freed
+blocks CANNOT be recomputed, the job dies). These tests pin the fix:
+per-thread keying + locks, thread-local reliable mode.
 
 The cosine_near_dup / hard_negatives pair is the deliberate worst case:
 both route through `_ckpt_cand`, whose eviction is exactly what used to
@@ -101,11 +101,12 @@ def test_ml_cache_is_per_thread(spark, sf_dir):
     """Two threads building the ML feature frame concurrently must each get
     a working frame (no cross-thread eviction of a frame the other thread is
     still consuming), and counts must agree with a fresh build."""
-    from weather_data_pipeline_spark.plans.queries import _FEATS_CACHE, _ml_feats
+    from weather_data_pipeline_spark import session_cache as SC
+    from weather_data_pipeline_spark.plans.queries import _ml_feats
 
-    _FEATS_CACHE.clear()
+    SC.clear()
     expected = _ml_feats(spark, sf_dir).count()
-    _FEATS_CACHE.clear()
+    SC.clear()
 
     counts: list[int] = []
     errors: list[BaseException] = []
@@ -130,19 +131,19 @@ def test_ml_cache_is_per_thread(spark, sf_dir):
     assert not errors, f"concurrent _ml_feats failed: {errors}"
     assert counts == [expected, expected]
     # cleanup: free both threads' entries so the shared session stays lean
-    _FEATS_CACHE.clear()
+    SC.clear()
 
 
 def test_one_entry_cache_shares_same_key_single_build():
     """ADVICE r06 rework: concurrent SAME-KEY callers must share one build
     (one stored value, no duplicate training) and builds must not hold the
-    global cache lock (a slow build blocks only same-key callers)."""
+    store lock (a slow build blocks only same-key callers)."""
     import time
 
-    from weather_data_pipeline_spark.plans.queries import _one_entry_cache
+    from weather_data_pipeline_spark import session_cache as SC
 
-    cache_a: dict = {}
-    cache_b: dict = {}
+    key_a = ("share_test_a", (), "app-test", "/k", ())
+    key_b = ("share_test_b", (), "app-test", "/k", ())
     builds = {"a": 0, "b": 0}
     started = threading.Event()
 
@@ -160,7 +161,7 @@ def test_one_entry_cache_shares_same_key_single_build():
     t_slow = [
         threading.Thread(
             target=lambda: results.append(
-                _one_entry_cache(cache_a, ("k",), build_slow)
+                SC._lease(key_a, build_slow)
             )
         )
         for _ in range(3)
@@ -168,11 +169,11 @@ def test_one_entry_cache_shares_same_key_single_build():
     for t in t_slow:
         t.start()
     started.wait(timeout=10)
-    # while the slow build holds ONLY its per-key lock, an unrelated cache
+    # while the slow build holds ONLY its per-key lock, an unrelated entry
     # must be immediately serviceable from this thread
     t0 = time.perf_counter()
-    assert _one_entry_cache(cache_b, ("other",), build_fast) == "B"
-    assert time.perf_counter() - t0 < 0.4, "unrelated cache blocked by build"
+    assert SC._lease(key_b, build_fast) == "B"
+    assert time.perf_counter() - t0 < 0.4, "unrelated entry blocked by build"
     for t in t_slow:
         t.join(timeout=30)
     assert results == ["A", "A", "A"]
@@ -183,20 +184,25 @@ def test_one_entry_cache_evicts_only_when_last_lease_drops():
     """Two live threads lease one key; one switches keys — the shared value
     must survive (the other still consumes it). When the LAST lease moves,
     the value is evicted exactly once. Dead threads' leases are pruned."""
-    from weather_data_pipeline_spark.plans.queries import _one_entry_cache
+    from weather_data_pipeline_spark import session_cache as SC
 
-    cache: dict = {}
+    def key(k):
+        return ("evict_test", (), "app-test", k, ())
+
+    def on_evict(_key, value):
+        evicted.append(value)
+
     evicted: list = []
     gate_built = threading.Barrier(3)
     gate_switch = threading.Event()
     gate_done = threading.Barrier(3)
 
     def worker(do_switch: bool):
-        assert _one_entry_cache(cache, ("k1",), lambda: "V1", evicted.append) == "V1"
+        assert SC._lease(key("k1"), lambda: "V1", on_evict) == "V1"
         gate_built.wait(timeout=30)
         gate_switch.wait(timeout=30)
         if do_switch:
-            _one_entry_cache(cache, ("k2",), lambda: "V2", evicted.append)
+            SC._lease(key("k2"), lambda: "V2", on_evict)
         gate_done.wait(timeout=30)
 
     ts = [threading.Thread(target=worker, args=(i == 0,)) for i in range(2)]
@@ -211,7 +217,7 @@ def test_one_entry_cache_evicts_only_when_last_lease_drops():
     assert evicted == [], "evicted a value another live thread still leases"
     # both workers are dead now: the next call on any key prunes their
     # leases and frees BOTH their values
-    assert _one_entry_cache(cache, ("k3",), lambda: "V3", evicted.append) == "V3"
+    assert SC._lease(key("k3"), lambda: "V3", on_evict) == "V3"
     assert sorted(evicted) == ["V1", "V2"], "dead threads' entries must free"
 
 

@@ -198,3 +198,30 @@ def test_local_k_core_matches_distributed(spark, monkeypatch):
         monkeypatch.setattr(graph, "_CC_LOCAL_MAX_ROWS", 0)
         dist = sorted(tuple(r) for r in graph.k_core(df, k=k).collect())
         assert local == dist, (k, local, dist)
+
+
+def test_local_paths_match_distributed_on_null_endpoints(spark, monkeypatch):
+    # a null endpoint is no node: the distributed loops' endpoint joins
+    # never match it, and the driver paths must give that same answer
+    from weather_data_pipeline_spark.operators import graph
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (3, 4), (5, None)], "s long, d long"
+    )
+
+    def both(run):
+        monkeypatch.setattr(graph, "_CC_LOCAL_MAX_ROWS", 10**9)
+        local = sorted(tuple(r) for r in run().collect())
+        monkeypatch.setattr(graph, "_CC_LOCAL_MAX_ROWS", 0)
+        dist = sorted(tuple(r) for r in run().collect())
+        assert local == dist
+        return dist
+
+    # node 5 keeps a component of its own on the distributed path
+    assert both(lambda: graph.connected_components(df)) == [
+        (1, 1), (2, 1), (3, 3), (4, 3), (5, 5)
+    ]
+    # and its only edge is peeled away with the other null edge
+    assert both(lambda: graph.k_core(df, k=1, src="s", dst="d")) == [
+        (1, 1), (2, 1), (3, 1), (4, 1)
+    ]

@@ -278,9 +278,10 @@ def test_ml_feats_underfill_guard_falls_back_to_full_table(
     _ml_feats must fall back to the full table instead of silently training
     on fewer rows. Forced here by pruning to a single city (far under cap at
     sf0.001)."""
+    from weather_data_pipeline_spark import session_cache as SC
     from weather_data_pipeline_spark.plans import queries as Q
 
-    Q._FEATS_CACHE.clear()
+    SC.clear()
     chosen_rec: list = []
 
     def fake_prune(counts, cap=4000, tail_per_city=24):
@@ -299,4 +300,4 @@ def test_ml_feats_underfill_guard_falls_back_to_full_table(
     assert pruned_only < 4000 and pruned_only < expected
     assert n == expected
     assert "weather_main_encoded" in df.columns
-    Q._FEATS_CACHE.clear()
+    SC.clear()

@@ -64,69 +64,59 @@ def test_train_regressors_unpersists(spark, sf_dir, tmp_path):
     assert _sql_cache_empty(spark)
 
 
-def test_ml_cache_lifecycle_alternating_keys(spark, sf_dir):
-    """Single-entry ML caches are a DOCUMENTED decision (VERDICT r03 #5):
-    alternating (session, sf_dir) keys retrains per call — intended for the
+def test_ml_cache_lifecycle_alternating_keys(spark, sf_dir, tmp_path):
+    """Single-entry ML caches are a documented decision: alternating
+    (session, sf_dir) keys retrains per call — intended for the
     back-to-back harness — but eviction must FREE the evicted feature
     frame's checkpoint blocks, never pin one frame per key ever used."""
-    from weather_data_pipeline_spark.plans.queries import (
-        _FEATS_CACHE,
-        _ml_feats,
-    )
+    import shutil
 
-    _FEATS_CACHE.clear()
+    from weather_data_pipeline_spark import session_cache as SC
+    from weather_data_pipeline_spark.plans.queries import _ml_feats
+
+    # same data, distinct key: the key holds the directory's realpath, so
+    # the second key is a copy of the table, not another spelling
+    other = str(tmp_path)
+    shutil.copyfile(f"{sf_dir}/events.parquet", f"{other}/events.parquet")
+    SC.clear()
     before = _persistent_rdd_ids(spark)
-    other = sf_dir.replace("sf0.001", "sf0.001/.") or sf_dir  # same data, distinct key
     for _ in range(3):  # alternate keys: each switch evicts + rebuilds
         _ml_feats(spark, sf_dir).count()
         _ml_feats(spark, other).count()
     new = _persistent_rdd_ids(spark) - before
     # only the CURRENT entry's checkpoint may stay pinned
     assert len(new) <= 1, f"evicted ML feats frames left {len(new)} pinned"
-    _FEATS_CACHE.clear()
+    SC.clear()
 
 
 def test_ml_cache_evict_skips_foreign_context_ids(spark, sf_dir):
-    """ADVICE r04: eviction must NOT free ids owned by a different (stopped,
-    replaced) SparkContext — after a restart RDD ids restart from 0, so a
-    stale id can collide with an unrelated live RDD in the new context. A
-    planted cache entry with a foreign applicationId but a LIVE victim's ids
+    """Eviction must NOT free ids owned by a different (stopped, replaced)
+    SparkContext — after a restart RDD ids restart from 0, so a stale id
+    can collide with an unrelated live RDD in the new context. A planted
+    entry keyed by a foreign applicationId but holding a LIVE victim's ids
     must leave the victim's blocks persistent after eviction."""
+    from weather_data_pipeline_spark import session_cache as SC
     from weather_data_pipeline_spark.operators.graph import (
         _ckpt_tracked,
         _free_ckpt,
     )
-    from weather_data_pipeline_spark.plans.queries import (
-        _FEATS_CACHE,
-        _ml_feats,
-    )
-
-    import threading
+    from weather_data_pipeline_spark.plans.queries import _ml_feats
 
     victim, victim_ids = _ckpt_tracked(spark.range(10))
     assert set(victim_ids) <= _persistent_rdd_ids(spark)
-    _FEATS_CACHE.clear()
-    # cache structure (r7): _entries maps key -> {lock, users, built,
-    # value}; _leases maps thread_ident -> key; value shape is (df, ids,
-    # owning applicationId) — plant a foreign app id with ids that COLLIDE
-    # with the live victim's, leased by THIS thread so the key switch in
-    # _ml_feats drops the last lease and runs eviction
-    tid = threading.get_ident()
-    _FEATS_CACHE["_leases"] = {tid: ("stale-key",)}
-    _FEATS_CACHE["_entries"] = {
-        ("stale-key",): {
-            "lock": threading.Lock(),
-            "users": {tid},
-            "built": True,
-            "value": (None, list(victim_ids), "app-STALE"),
-        }
-    }
+    SC.clear()
+    # an ml_feats entry of a foreign application whose ids COLLIDE with the
+    # live victim's, leased by THIS thread so the key switch in _ml_feats
+    # drops the last lease and runs eviction
+    stale = ("ml_feats", (), "app-STALE", "/stale", ())
+    SC._lease(stale, lambda: (None, list(victim_ids)), on_evict=SC._free_blocks)
     _ml_feats(spark, sf_dir).count()  # evicts the planted entry
+    assert stale not in SC._ENTRIES
     assert set(victim_ids) <= _persistent_rdd_ids(spark), (
         "evict freed ids owned by a foreign context (id-collision hazard)"
     )
     _free_ckpt(spark, victim_ids)
-    _FEATS_CACHE.clear()
+    SC.clear()
 
 
 def test_iterative_graph_loops_free_per_round_checkpoints(spark, monkeypatch):
@@ -214,50 +204,42 @@ def test_hard_negatives_count_then_collect_does_not_redo_matmul(spark, sf_dir):
     assert "mapInPandas" not in plan.lower().replace(" ", "")
 
 
-def _plant_entry(cache: dict, key, value) -> None:
-    import threading
+def _plant_entry(key, value) -> None:
+    """A built materialized entry holding ``value`` = (frame, ids), leased
+    by the calling thread."""
+    from weather_data_pipeline_spark import session_cache as SC
 
-    cache["_entries"] = {
-        key: {
-            "lock": threading.Lock(),
-            "users": set(),
-            "built": True,
-            "value": value,
-        }
-    }
-    cache["_leases"] = {}
+    SC._lease(key, lambda: value, on_evict=SC._free_blocks)
 
 
 def test_drop_cache_entry_keeps_rebuilt_entry(spark):
-    """ADVICE r08 validation-loop race: a slow validator that observed dead
-    ids must NOT pop an entry another thread already rebuilt — drop happens
-    only while the stored value still holds the ids that failed."""
-    from weather_data_pipeline_spark.plans.queries import _drop_cache_entry
+    """Validation-loop race: a slow validator that observed dead ids must
+    NOT pop an entry another thread already rebuilt — drop happens only
+    while the stored value still holds the ids that failed."""
+    from weather_data_pipeline_spark import session_cache as SC
 
-    cache: dict = {}
-    app = spark.sparkContext.applicationId
-    _plant_entry(cache, ("k",), ("rebuilt-df", [9999991], app))
+    key = ("drop_test", (), spark.sparkContext.applicationId, "/k", ())
+    _plant_entry(key, ("rebuilt-df", [9999991]))
     # slow validator saw OLD ids [123]; the entry now holds the rebuild
-    _drop_cache_entry(cache, ("k",), spark, expect_ids=[123])
-    assert ("k",) in cache["_entries"], "live rebuilt entry was dropped"
+    SC._drop(key, expect_ids=[123])
+    assert key in SC._ENTRIES, "live rebuilt entry was dropped"
     # matching ids: the entry is the dead one — dropped
-    _drop_cache_entry(cache, ("k",), spark, expect_ids=[9999991])
-    assert ("k",) not in cache["_entries"]
+    SC._drop(key, expect_ids=[9999991])
+    assert key not in SC._ENTRIES
 
 
 def test_drop_cache_entry_frees_surviving_blocks(spark):
-    """ADVICE r08: _ckpt_blocks_alive is all-or-nothing, so an entry with
-    only SOME blocks lost is dropped while survivors would stay pinned —
-    the drop must best-effort free whatever is still alive."""
+    """Block validation is all-or-nothing, so an entry with only SOME
+    blocks lost is dropped while survivors would stay pinned — the drop
+    must best-effort free whatever is still alive."""
+    from weather_data_pipeline_spark import session_cache as SC
     from weather_data_pipeline_spark.operators.graph import _ckpt_tracked
-    from weather_data_pipeline_spark.plans.queries import _drop_cache_entry
 
     _df, ids = _ckpt_tracked(spark.range(10))
     assert set(ids) <= _persistent_rdd_ids(spark)
-    cache: dict = {}
-    app = spark.sparkContext.applicationId
-    _plant_entry(cache, ("k",), (None, list(ids), app))
-    _drop_cache_entry(cache, ("k",), spark, expect_ids=list(ids))
+    key = ("drop_test", (), spark.sparkContext.applicationId, "/k", ())
+    _plant_entry(key, (None, list(ids)))
+    SC._drop(key, expect_ids=list(ids))
     assert not (set(ids) & _persistent_rdd_ids(spark)), (
         "dropped entry's surviving checkpoint blocks stayed pinned"
     )
@@ -267,16 +249,17 @@ def test_drop_cache_entry_skips_foreign_context_ids(spark):
     """The survivor-freeing path must respect the same foreign-appId guard
     as eviction: stale ids from a restarted context may collide with a live
     victim's ids in the new context."""
+    from weather_data_pipeline_spark import session_cache as SC
     from weather_data_pipeline_spark.operators.graph import (
         _ckpt_tracked,
         _free_ckpt,
     )
-    from weather_data_pipeline_spark.plans.queries import _drop_cache_entry
 
     victim, ids = _ckpt_tracked(spark.range(10))
-    cache: dict = {}
-    _plant_entry(cache, ("k",), (None, list(ids), "app-STALE"))
-    _drop_cache_entry(cache, ("k",), spark, expect_ids=list(ids))
+    key = ("drop_test", (), "app-STALE", "/k", ())
+    _plant_entry(key, (None, list(ids)))
+    SC._drop(key, expect_ids=list(ids))
+    assert key not in SC._ENTRIES
     assert set(ids) <= _persistent_rdd_ids(spark), (
         "drop freed ids owned by a foreign context"
     )

@@ -1,4 +1,4 @@
-"""The session-materialization layer (plans/queries._session_materialized):
+"""The session-materialization layer (session_cache.materialized):
 cached shared frames must be value-identical to a fresh computation of the
 same plan, reused within a (session, sf_dir) key, and rebuilt per key.
 
@@ -67,15 +67,17 @@ def test_fpw_plan_memo_reuses_and_keys_by_sf(spark, sf_dir):
     a = Q.REGISTRY["feature_pipeline_weather"].spark(spark, sf_dir)
     b = Q.REGISTRY["feature_pipeline_weather"].spark(spark, sf_dir)
     assert a is b  # memo hit: same immutable plan object
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in Q._FPW_PLAN_MEMO
+    from weather_data_pipeline_spark import session_cache as SC
+
+    key = SC.key("feature_pipeline_weather", spark, sf_dir, ("events",))
+    assert SC._MEMO[key[:-1]] == (key, a)
 
 
 def test_concurrent_block_loss_validators_dont_drop_rebuild(spark, sf_dir):
     """ADVICE r08 race, stress form: N threads that all observed dead
     checkpoint blocks call the lookup concurrently. Exactly one rebuild
     must win; the losers must NOT pop the winner's live entry (the
-    expect_ids guard in _drop_cache_entry) — afterwards the cache serves
+    expect_ids guard in session_cache._drop) — afterwards the cache serves
     one entry whose blocks are alive and whose values match a fresh
     computation."""
     import threading

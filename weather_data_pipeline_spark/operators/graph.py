@@ -351,7 +351,9 @@ def connected_components(
     `edges` is treated as undirected (each pair is doubled internally);
     `component` is the minimum node id in the component — deterministic.
     Raises RuntimeError if the total superstep budget (`max_iter`) is
-    exhausted before convergence.
+    exhausted before convergence — on the distributed path only: at or
+    under `_CC_LOCAL_MAX_ROWS` doubled edges the driver path computes the
+    exact fixpoint and never raises. Null endpoints are no nodes.
 
     MULTILEVEL CONTRACTION (round 5): min-label propagation + pointer jump
     converges fast on most graphs, but on real candidate graphs with
@@ -476,8 +478,11 @@ def connected_components(
 def _local_components(spark: SparkSession, pairs: list) -> DataFrame:
     """Driver union-find over a bounded edge list: (node, component) with
     component = min node id of the component — the exact fixpoint the
-    distributed min-label loop converges to. Returned as a LocalRelation
-    (no pickled-RDD scan, no Python workers at action time)."""
+    distributed min-label loop converges to, so this path never raises on
+    `max_iter`. A null endpoint is no node and joins nothing, as in the
+    distributed loop: the edge's other endpoint stays a node of its own
+    component. Returned as a LocalRelation (no pickled-RDD scan, no Python
+    workers at action time)."""
     from ..functions.localrel import literal_df
 
     parent: dict = {}
@@ -491,6 +496,8 @@ def _local_components(spark: SparkSession, pairs: list) -> DataFrame:
         return root
 
     for s, d in pairs:
+        if s is None or d is None:
+            continue
         rs, rd = find(s), find(d)
         if rs != rd:
             # attach larger root under smaller so the root IS the min id
@@ -498,7 +505,7 @@ def _local_components(spark: SparkSession, pairs: list) -> DataFrame:
                 parent[rd] = rs
             else:
                 parent[rs] = rd
-    nodes = {n for e in pairs for n in e}
+    nodes = {n for e in pairs for n in e if n is not None}
     out = sorted((n, find(n)) for n in nodes)
     return literal_df(spark, out, "node long, component long")
 
@@ -706,7 +713,10 @@ def k_core(
     aggregation + one semi-join-style edge filter, both keyed on vertex ids,
     with `localCheckpoint` truncating per-round lineage. Rounds needed =
     peel depth (a path peels ~len/2 rounds); raises RuntimeError if no
-    fixpoint within `max_rounds` so callers never get a half-peeled answer.
+    fixpoint within `max_rounds` so callers never get a half-peeled answer
+    — on the distributed path only: at or under `_CC_LOCAL_MAX_ROWS` edges
+    the driver peel reaches the exact fixpoint and never raises. Edges
+    with a null endpoint are dropped.
     """
     spark = edges.sparkSession
     e, e_ids, n_edges = _ckpt_counted(
@@ -760,13 +770,18 @@ def _local_k_core(spark: SparkSession, pairs: list, k: int) -> DataFrame:
     nodes of degree < k; return (node, core_degree) for the survivors. The
     distributed loop counts BOTH endpoints of every edge row per round
     (unionAll of id_a and id_b), so a self-loop contributes 2 to its node's
-    degree — replicated here. Returned as a LocalRelation."""
+    degree — replicated here. It peels to the exact fixpoint, so this path
+    never raises on `max_rounds`. An edge with a null endpoint never passes
+    the distributed loop's endpoint joins, so it is dropped here before the
+    peel. Returned as a LocalRelation."""
     from collections import defaultdict
 
     from ..functions.localrel import literal_df
 
     adj: dict = defaultdict(list)
     for a, b in pairs:
+        if a is None or b is None:
+            continue
         adj[a].append(b)
         adj[b].append(a)
     alive = set(adj)

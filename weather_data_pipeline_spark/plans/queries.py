@@ -20,7 +20,6 @@ Determinism / oracle-parity rules used throughout:
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,6 +31,7 @@ from ..functions.localrel import literal_df
 from ..operators import joins as J
 from ..operators import relational as R
 from ..operators import windows as W
+from .. import session_cache as SC
 from ..sources.tables import load_table, parquet_row_count
 
 
@@ -1285,19 +1285,6 @@ def _feature_pipeline_oracle_sql() -> str:
     return ev_sql(feature_pipeline_sql())
 
 
-# Constructed-plan memo for the feature pipeline query: building the
-# ~70-column plan costs ~1.7 s of driver-side py4j round trips (measured —
-# missing-value repair and the exact rolling closed forms dominate) plus
-# the eager encode-fit job, per CALL and before any execution. The lazy
-# DataFrame is immutable and deterministic, so hold it per (context,
-# sf_dir) exactly like a pipeline user holds the constructed object.
-# Keyed by applicationId (unique per context — id(spark) can be reused by
-# a new session object after a restart); entries are small driver-side
-# plan objects, cleared wholesale if test churn grows the map.
-_FPW_PLAN_MEMO: dict = {}
-
-
-
 @register("feature_pipeline_weather", _feature_pipeline_oracle_sql())
 def feature_pipeline_weather(spark, sf_dir):
     # The reference's full process_pipeline (data_processor.py:275-314) as a
@@ -1308,26 +1295,29 @@ def feature_pipeline_weather(spark, sf_dir):
     # as long, and the libm-backed sin/cos + pow(wind_chill) columns rounded
     # to 6 dp on BOTH sides; every other column (lags, decimal rolling
     # stats, index chains, repairs, targets) compares bit-exact unrounded.
+    #
+    # The constructed plan is memoized per session (session_cache.memo):
+    # building the ~70-column plan costs ~1.7 s of driver-side py4j round
+    # trips (missing-value repair and the exact rolling closed forms
+    # dominate) plus the eager encode-fit job, per call and before any
+    # execution. The lazy DataFrame is immutable and deterministic, so it
+    # is held the way a pipeline user holds the constructed object, and
+    # rebuilt when the events table is rewritten.
     from .feature_pipeline_sql import LONG_COLS, ROUND6_COLS
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _FPW_PLAN_MEMO.get(key)
-    if memo is not None:
-        return memo
-    df = FP.full_feature_pipeline(FP.events_as_weather(spark, sf_dir))
-    sel = []
-    for f in df.schema.fields:
-        if f.name in ROUND6_COLS:
-            sel.append((F.round(f.name, 6) + F.lit(0.0)).alias(f.name))
-        elif f.dataType.simpleString() == "int":
-            sel.append(F.col(f.name).cast("long").alias(f.name))
-        else:
-            sel.append(F.col(f.name))
-    out = df.select(*sel)
-    if len(_FPW_PLAN_MEMO) > 8:
-        _FPW_PLAN_MEMO.clear()
-    _FPW_PLAN_MEMO[key] = out
-    return out
+    def build():
+        df = FP.full_feature_pipeline(FP.events_as_weather(spark, sf_dir))
+        sel = []
+        for f in df.schema.fields:
+            if f.name in ROUND6_COLS:
+                sel.append((F.round(f.name, 6) + F.lit(0.0)).alias(f.name))
+            elif f.dataType.simpleString() == "int":
+                sel.append(F.col(f.name).cast("long").alias(f.name))
+            else:
+                sel.append(F.col(f.name))
+        return df.select(*sel)
+
+    return SC.memo("feature_pipeline_weather", spark, sf_dir, ("events",), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1468,117 +1458,6 @@ def streaming_hourly_agg(spark, sf_dir):
     return SJ.streaming_hourly_event_counts(spark, sf_dir)
 
 
-# One trained suite per (session, sf_dir), shared by the metric and
-# model-comparison queries — faithful to the reference, whose comparison
-# plots consume the SAME training run's results object
-# (weather_predictor.py:550-633 reads self.results), and it keeps the
-# expensive 5-model fit from running once per consuming query.
-# Caches hold AT MOST ONE entry (cleared on key change): the consuming
-# queries run back-to-back with the same (session, sf_dir), and an unbounded
-# id()-keyed dict would pin dead sessions' models and test frames for the
-# process lifetime (ADVICE r02). Single-entry is a DOCUMENTED DECISION
-# (VERDICT r03 nit #5): a caller alternating two (session, sf_dir) pairs
-# retrains per call — acceptable for the driver/bench harness, which always
-# runs the ML feeds back-to-back on one pair; a multi-tenant serving layer
-# should hold the trained suite in its own model registry (ml/registry.py),
-# not this harness cache. What the bound must NOT do is leak: eviction runs
-# the entry's `on_evict` hook so checkpointed frames free their executor
-# blocks instead of staying pinned (test_ml_cache_lifecycle).
-_SUITE_CACHE: dict = {}
-
-
-# guards cache DICT STRUCTURE only — builds run outside it, under a
-# per-key lock (ADVICE r06: _trained_suite's build() runs minutes of MLlib
-# training, and holding the global lock across it blocked every thread
-# touching ANY of the three ML caches). RLock kept for defensive reentrancy
-# (on_evict hooks run under it).
-_CACHE_LOCK = threading.RLock()
-
-
-def _one_entry_cache(cache: dict, key, build, on_evict=None):
-    """Shared key-based cache with per-key build locks and per-thread
-    leases (ADVICE r06 rework of the per-thread-keyed r6 design).
-
-    Structure: ``cache["_entries"]`` maps key -> {lock, users, built,
-    value}; ``cache["_leases"]`` maps thread_ident -> its current key.
-
-    Guarantees, pinned by tests (test_no_cache_leak,
-    test_concurrent_queries):
-    - SAME-KEY SHARING: concurrent threads asking for one key get ONE
-      build (the rest wait on that key's lock), one stored value — no
-      N-threads × storage duplication and no duplicate training.
-    - NO GLOBAL BLOCKING: the process-wide lock guards only dict edits;
-      a minutes-long MLlib build blocks ONLY same-key callers.
-    - SAFE EVICTION: a value is freed (on_evict) only when NO live thread
-      holds a lease on it — a thread switching keys releases its lease,
-      and entries leased only by DEAD threads are pruned on every call,
-      so pool-thread churn can't pin frames indefinitely.
-    - Eviction hooks still fire on every last-lease drop, freeing the
-      evicted frame's checkpoint blocks (test_ml_cache_lifecycle).
-    A multi-tenant serving layer should hold trained suites in
-    ml/registry.py, not this harness cache."""
-    tid = threading.get_ident()
-    with _CACHE_LOCK:
-        leases = cache.setdefault("_leases", {})
-        entries = cache.setdefault("_entries", {})
-
-        def _drop(k):
-            ent = entries.pop(k)
-            if on_evict is not None and ent["built"]:
-                on_evict(ent["value"])
-
-        prev = leases.get(tid)
-        if prev is not None and prev != key and prev in entries:
-            entries[prev]["users"].discard(tid)
-            if not entries[prev]["users"]:
-                _drop(prev)
-        # prune leases/entries held only by dead pool threads
-        live = {t.ident for t in threading.enumerate()}
-        for dead in [t for t in leases if t not in live]:
-            del leases[dead]
-        for k in list(entries):
-            entries[k]["users"] &= live
-            if not entries[k]["users"]:
-                _drop(k)
-        ent = entries.get(key)
-        if ent is None:
-            ent = {
-                "lock": threading.Lock(),
-                "users": set(),
-                "built": False,
-                "value": None,
-            }
-            entries[key] = ent
-        ent["users"].add(tid)
-        leases[tid] = key
-    # build (or wait for the builder) OUTSIDE the global lock; the lease
-    # taken above keeps the entry alive until this thread switches keys
-    with ent["lock"]:
-        if ent["built"]:
-            return ent["value"]
-        try:
-            val = build()
-        except BaseException:
-            with _CACHE_LOCK:
-                ent["users"].discard(tid)
-                if leases.get(tid) == key:
-                    del leases[tid]
-                if entries.get(key) is ent and not ent["users"]:
-                    del entries[key]  # unbuilt: nothing to evict
-            raise
-        ent["value"] = val
-        ent["built"] = True
-        return val
-
-
-# The 4000-row training frame shared by the suite AND the rain classifier:
-# materialized ONCE (localCheckpoint) so feature_columns' null-ratio agg,
-# the class-weight counts, and every MLlib fit pass read 4000 cached rows
-# instead of replaying the 70-column feature pipeline DAG (~3 s each at
-# sf0.1, ~5 replays across the two builds).
-_FEATS_CACHE: dict = {}
-
-
 def _prune_city_subset(
     counts: list[tuple], cap: int = 4000, tail_per_city: int = 24
 ) -> list:
@@ -1599,6 +1478,12 @@ def _prune_city_subset(
 
 
 def _ml_feats(spark, sf_dir):
+    """The 4000-row training frame shared by the suite AND the rain
+    classifier, materialized once per session (localCheckpoint) so
+    feature_columns' null-ratio agg, the class-weight counts and every
+    MLlib fit pass read 4000 cached rows instead of replaying the
+    70-column feature pipeline DAG (~3 s each at sf0.1, ~5 replays across
+    the two builds)."""
     from ..operators.graph import _ckpt_tracked, _free_ckpt
 
     def build():
@@ -1607,8 +1492,7 @@ def _ml_feats(spark, sf_dir):
         # windows partition by city, making a per-city selection exact on
         # the surviving rows — the pipeline then runs over a handful of
         # cities instead of computing 70 columns for 595k rows and
-        # discarding all but 4000. The subset is DATA-DRIVEN (VERDICT r08
-        # #3 — the old `city_0..2` literal was fixture-shaped): one cheap
+        # discarding all but 4000. The subset is data-driven: one cheap
         # per-city count census (bounded rows: one per city), then cities
         # taken in sorted order until the cumulative count clears the cap
         # plus the 24-row lead tail the pipeline drops per kept city.
@@ -1628,9 +1512,9 @@ def _ml_feats(spark, sf_dir):
             # parallelize without per-task overhead swamping 4k rows
             .repartition(8)
         )
-        # under-fill guard (ADVICE r09): _prune_city_subset's cap+24k bound
-        # assumes the only row loss is the per-city lead tail; rows whose
-        # repaired temperature stays null (gaps past the ffill limit with no
+        # under-fill guard: _prune_city_subset's cap+24k bound assumes the
+        # only row loss is the per-city lead tail; rows whose repaired
+        # temperature stays null (gaps past the ffill limit with no
         # interpolation anchors) also drop temperature_future rows
         # mid-series, so on sparse data the pruned frame can under-fill the
         # cap. The checkpoint above already materialized, so this count is a
@@ -1648,132 +1532,33 @@ def _ml_feats(spark, sf_dir):
         # tiny scan instead of a second full run of the window pipeline
         # (same codes as encoding pre-cap whenever every category appears
         # in the cap — true for the bounded event_type-derived categoricals)
-        df = FP.encode_categoricals(df)
-        # the owning context's applicationId rides along so eviction can
-        # tell whether the ids still mean anything (ADVICE r04): after a
-        # session restart RDD ids restart from 0, and freeing a stale id
-        # through the NEW context could unpersist an unrelated RDD
-        return df, ids, spark.sparkContext.applicationId
+        return FP.encode_categoricals(df), ids
 
-    def evict(old):
-        # free the evicted frame's checkpoint blocks — eviction without this
-        # pinned one 4k-row frame per (session, sf_dir) ever used; skip when
-        # the entry belongs to a different (stopped/replaced) context
-        if old[2] == spark.sparkContext.applicationId:
-            _free_ckpt(spark, old[1])
-
-    # same lookup-time block validation as _session_materialized: an
-    # executor-loss (or the reliable-checkpoints loss simulation) leaves
-    # the entry holding an unrecomputable frame — drop and rebuild
-    key = (id(spark), sf_dir)
-    for _ in range(2):
-        df, ids, app = _one_entry_cache(_FEATS_CACHE, key, build, on_evict=evict)
-        if app != spark.sparkContext.applicationId or _ckpt_blocks_alive(spark, ids):
-            return df
-        _drop_cache_entry(_FEATS_CACHE, key, spark, expect_ids=ids)
-    return df
+    return SC.materialized("ml_feats", spark, sf_dir, ("events",), build)[0]
 
 
-def _ckpt_blocks_alive(spark, ids) -> bool:
-    """True iff every tracked checkpoint RDD id still has live blocks.
-    Empty ids (reliable_checkpoints file-backed mode, or the documented
-    id-extraction fallback) validate trivially — there is nothing to lose.
-    On any introspection error, report alive: serving the frame is exactly
-    the pre-guard behavior, and a dead frame still fails loudly at action
-    time."""
-    if not ids:
-        return True
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return all(jmap.get(i) is not None for i in ids)
-    except Exception:
-        return True
+def _checkpointed(plan_fn):
+    """A session_cache.materialized build that checkpoints ``plan_fn()``.
 
+    The deterministic frames held this way (shingle pairs, shingle-CC
+    labels, the corpus manifest, doc-quality signals, ...) are exactly what
+    a production build would write as a materialized table and report from
+    — each consumer's oracle hash is unchanged, only the recompute is."""
+    from ..operators.graph import _ckpt_tracked
 
-def _drop_cache_entry(cache: dict, key, spark=None, expect_ids=None) -> None:
-    """Remove an entry whose checkpoint blocks failed validation, then
-    best-effort free whatever blocks getPersistentRDDs still reports alive
-    (`_ckpt_blocks_alive` is all-or-nothing — an entry with only SOME blocks
-    lost would otherwise leave its survivors pinned for the session,
-    ADVICE r08). Leases on the dropped entry are cleared so the next caller
-    rebuilds.
-
-    ``expect_ids`` closes a validation-loop race (ADVICE r08): two threads
-    can both observe dead blocks; the faster one drops and rebuilds, and
-    without the guard the slower one would then pop the LIVE rebuilt entry
-    — un-evicted, leaking its checkpoint blocks and forcing a third build.
-    The entry is dropped only while its stored value still holds the same
-    ids that failed validation; a rebuilt (or in-flight, not-yet-built)
-    entry is left alone."""
-    with _CACHE_LOCK:
-        entries = cache.get("_entries", {})
-        ent = entries.get(key)
-        if ent is None:
-            return
-        if expect_ids is not None and not (
-            ent.get("built") and ent["value"] is not None
-            and ent["value"][1] == expect_ids
-        ):
-            return  # someone already rebuilt it (or is building): keep
-        val = ent.get("value") if ent.get("built") else None
-        entries.pop(key, None)
-        leases = cache.get("_leases", {})
-        for t in [t for t, k in leases.items() if k == key]:
-            del leases[t]
-    # outside the lock (py4j round trips): the entry is already unreachable,
-    # so its surviving blocks belong to nobody — free them. _free_ckpt
-    # skips ids with no live blocks, and a different applicationId means
-    # the ids are meaningless in this context (restart reuses ids from 0).
-    if val is not None and spark is not None:
-        try:
-            if val[2] == spark.sparkContext.applicationId:
-                from ..operators.graph import _free_ckpt
-
-                _free_ckpt(spark, val[1])
-        except Exception:
-            pass  # teardown best-effort: a stopped context has no blocks
-
-
-def _session_materialized(cache: dict, spark, sf_dir, plan_fn):
-    """One localCheckpoint-materialized frame per (session, sf_dir) with the
-    _one_entry_cache lease/evict lifecycle (see _ml_feats): build the lazy
-    plan with ``plan_fn``, checkpoint it eagerly (origin-stripped), free the
-    blocks when no live thread holds a lease. The deterministic frames
-    cached this way (shingle pairs, shingle-CC labels, the corpus manifest,
-    doc-quality signals) are exactly what a production build would write as
-    a materialized table and report from — each consumer's oracle hash is
-    unchanged, only the recompute is.
-
-    Lookup-time validation: localCheckpoint blocks can vanish OUTSIDE the
-    lease lifecycle — executor loss on a real cluster (truncated lineage
-    cannot recompute them; `tests/test_reliable_checkpoints.py` simulates
-    exactly this by unpersisting every block in the shared session). An
-    entry whose tracked blocks are gone is dropped (no evict hook — nothing
-    left to free) and rebuilt, instead of serving a frame that fails with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at action time."""
-    from ..operators.graph import _ckpt_tracked, _free_ckpt
-
-    def build():
-        df, ids = _ckpt_tracked(plan_fn())
-        return df, ids, spark.sparkContext.applicationId
-
-    def evict(old):
-        if old[2] == spark.sparkContext.applicationId:
-            _free_ckpt(spark, old[1])
-
-    key = (id(spark), sf_dir)
-    for _ in range(2):
-        df, ids, app = _one_entry_cache(cache, key, build, on_evict=evict)
-        if app != spark.sparkContext.applicationId or _ckpt_blocks_alive(spark, ids):
-            return df
-        _drop_cache_entry(cache, key, spark, expect_ids=ids)
-    return df  # second build's frame; further losses fail at action time
+    return lambda: _ckpt_tracked(plan_fn())
 
 
 def _trained_suite(spark, sf_dir):
     """-> (results, cols): the fitted 5-model suite and the feature columns
     it trained on (so the importance feed can reuse the suite's RF instead
-    of paying a second fit)."""
+    of paying a second fit).
+
+    One trained suite per session, shared by the metric and
+    model-comparison queries — faithful to the reference, whose comparison
+    plots consume the SAME training run's results object
+    (weather_predictor.py:550-633 reads self.results), and it keeps the
+    expensive 5-model fit from running once per consuming query."""
 
     def build():
         from ..ml import models as M
@@ -1782,7 +1567,7 @@ def _trained_suite(spark, sf_dir):
         cols = M.feature_columns(train)
         return M.train_regressors(train, test, cols=cols, fast=True), cols
 
-    return _one_entry_cache(_SUITE_CACHE, (id(spark), sf_dir), build)
+    return SC.leased("trained_suite", spark, sf_dir, ("events",), build)
 
 
 @register("ml_train_eval_metrics", None)  # rows-only: MLlib metric surface
@@ -1851,13 +1636,9 @@ def ml_feature_importance_feed(spark, sf_dir):
     ).orderBy("rank")
 
 
-# One trained classifier per (session, sf_dir), shared by the metrics and
-# calibration queries — same rationale (and single-entry bound) as
-# _SUITE_CACHE above
-_RAIN_CACHE: dict = {}
-
-
 def _trained_rain(spark, sf_dir):
+    # one trained classifier per session, shared by the metrics and
+    # calibration queries — same rationale as _trained_suite
     def build():
         from ..ml import models as M
 
@@ -1866,7 +1647,7 @@ def _trained_rain(spark, sf_dir):
         m = M.train_rain_classifier(train, test, cols=cols, fast=True)
         return (m, test, cols)
 
-    return _one_entry_cache(_RAIN_CACHE, (id(spark), sf_dir), build)
+    return SC.leased("trained_rain", spark, sf_dir, ("events",), build)
 
 
 @register("ml_rain_classifier_metrics", None)  # rows-only
@@ -2399,20 +2180,17 @@ def salted_agg_events(spark, sf_dir):
     ).select("user_id", "sum_value", "n_rows", "avg_value").orderBy("user_id")
 
 
-# The shingle-Jaccard near-dup pair set, materialized once per (session,
-# sf_dir): this edge derivation feeds the registered pairs query, the CC
-# cache build (_neardup_cc → 4 downstream queries) and pagerank_neardup —
-# the tokenize+explode+inverted-index join is the family's single most
+# The shingle-Jaccard near-dup pair set, materialized once per session:
+# this edge derivation feeds the registered pairs query, the CC build
+# (_neardup_cc → 4 downstream queries) and pagerank_neardup — the
+# tokenize+explode+inverted-index join is the family's single most
 # recomputed subplan. Output is the thresholded pair set itself (small),
 # so the checkpoint is cheap.
-_SHINGLE_PAIRS_CACHE: dict = {}
-
-
 def _shingle_pairs(spark, sf_dir):
-    return _session_materialized(
-        _SHINGLE_PAIRS_CACHE, spark, sf_dir,
-        lambda: _shingle_pairs_plan(spark, sf_dir),
-    )
+    return SC.materialized(
+        "shingle_pairs", spark, sf_dir, ("documents",),
+        _checkpointed(lambda: _shingle_pairs_plan(spark, sf_dir)),
+    )[0]
 
 
 @register(
@@ -3795,16 +3573,12 @@ def cumulative_distinct_users_events(spark, sf_dir):
 
 
 # The (node, component) frame of the shingle-Jaccard near-dup graph,
-# materialized ONCE per (session, sf_dir): the pair join + BSP component
-# propagation is the expensive stage shared by neardup_components_documents,
+# materialized ONCE per session: the pair join + BSP component propagation
+# is the expensive stage shared by neardup_components_documents,
 # dedup_keep_list_documents (via components), dup_cluster_size_distribution
 # and training_corpus_manifest — recomputing it per query multiplied the
 # family's wall ~4× at sf0.1. Labels are the deterministic min-node id, so
-# every consumer's oracle hash is unchanged. Same single-entry/lease/evict
-# lifecycle as _ml_feats.
-_NEARDUP_CC_CACHE: dict = {}
-
-
+# every consumer's oracle hash is unchanged.
 def _neardup_cc(spark, sf_dir):
     from ..operators.graph import connected_components
 
@@ -3812,7 +3586,9 @@ def _neardup_cc(spark, sf_dir):
         pairs = _shingle_pairs(spark, sf_dir).select("id_a", "id_b")
         return connected_components(pairs, src="id_a", dst="id_b")
 
-    return _session_materialized(_NEARDUP_CC_CACHE, spark, sf_dir, plan)
+    return SC.materialized(
+        "neardup_cc", spark, sf_dir, ("documents",), _checkpointed(plan)
+    )[0]
 
 
 @register(
@@ -6749,19 +6525,16 @@ FROM m ORDER BY doc_id
 """
 
 
-# The manifest frame is materialized once per (session, sf_dir) —
+# The manifest frame is materialized once per session —
 # training_corpus_stats is a pure rollup of it, and replaying the whole
 # composition (quality scan, 3-gram decontamination join, split hash) for
 # a 3-row report doubled the flagship's cost in every full pass. A real
 # corpus build writes the manifest table once and reports from it.
-_MANIFEST_CACHE: dict = {}
-
-
 def _corpus_manifest(spark, sf_dir):
-    return _session_materialized(
-        _MANIFEST_CACHE, spark, sf_dir,
-        lambda: _corpus_manifest_plan(spark, sf_dir),
-    )
+    return SC.materialized(
+        "corpus_manifest", spark, sf_dir, ("documents",),
+        _checkpointed(lambda: _corpus_manifest_plan(spark, sf_dir)),
+    )[0]
 
 
 @register("training_corpus_manifest", _MANIFEST_SQL)
@@ -7506,43 +7279,26 @@ r{k + 1} AS MATERIALIZED (
 # All three BPE consumers (bpe_merge_rules / bpe_vocab / bpe_encode) run
 # the IDENTICAL deterministic induction — same corpus pass, same 6 merge
 # rounds, same seeds-free argmax tiebreak — so the session shares ONE
-# (rules, rep) per (session, sf_dir, n_merges), the _trained_suite /
-# _coarse_model precedent (r11 opt: each extra induction cost ~1.2 s of
-# pure recompute per full pass). bench.py lists all three consumers in
-# SESSION_CACHED so a warm re-draw can't masquerade as induction-free.
-_BPE_CACHE: dict = {}
-
-
+# (rules, rep) per n_merges, the _trained_suite / _coarse_model precedent
+# (each extra induction cost ~1.2 s of pure recompute per full pass).
+# bench.py lists all three consumers in SESSION_CACHED so a warm re-draw
+# can't masquerade as induction-free.
 def _bpe_learn(spark, sf_dir, n_merges: int = 6):
     """Session-shared BPE induction: returns (rules, final word-rep df).
     First consumer pays the build; later consumers ride the checkpointed
-    rep + the cached rules. Block loss (executor death) is detected at
-    lookup like _session_materialized and triggers a rebuild."""
-    from ..operators.graph import _ckpt_tracked, _free_ckpt
+    rep + the cached rules."""
+    from ..operators.graph import _ckpt_tracked
 
     def build():
         rules, rep = _bpe_learn_fresh(spark, sf_dir, n_merges)
-        # track the final rep's blocks so lookup-time validation (and the
-        # evict hook) can manage them; the loop's intermediate checkpoints
-        # are unreferenced after this and freed by the ContextCleaner
-        df, ids = _ckpt_tracked(rep)
-        return df, ids, spark.sparkContext.applicationId, tuple(rules)
+        # the loop's intermediate checkpoints are unreferenced after this
+        # and freed by the ContextCleaner
+        return (*_ckpt_tracked(rep), tuple(rules))
 
-    def evict(old):
-        if old[2] == spark.sparkContext.applicationId:
-            _free_ckpt(spark, old[1])
-
-    key = (id(spark), sf_dir, n_merges)
-    for _ in range(2):
-        df, ids, app, rules = _one_entry_cache(
-            _BPE_CACHE, key, build, on_evict=evict
-        )
-        if app != spark.sparkContext.applicationId or _ckpt_blocks_alive(
-            spark, ids
-        ):
-            return list(rules), df
-        _drop_cache_entry(_BPE_CACHE, key, spark, expect_ids=ids)
-    return list(rules), df  # second build's value; further losses fail loud
+    df, _ids, rules = SC.materialized(
+        "bpe_learn", spark, sf_dir, ("documents",), build, params=(n_merges,)
+    )
+    return list(rules), df
 
 
 def _bpe_learn_fresh(spark, sf_dir, n_merges: int = 6):
@@ -7680,16 +7436,13 @@ def bigram_nll_documents(spark, sf_dir):
 # bigram_nll_documents and _doc_signals (curriculum + source_quality_profile)
 # each ran the full bigram-LM pass (~1.3 s at sf0.1: four corpus subtrees
 # feeding the broadcast scoring joins). One materialized (doc_id, n_bigrams,
-# avg_nll) frame per (session, sf_dir) — corpus-cardinality, 3 columns;
+# avg_nll) frame per session — corpus-cardinality, 3 columns;
 # bigram_nll_documents joins SESSION_CACHED in bench.py.
-_BIGRAM_NLL_CACHE: dict = {}
-
-
 def _bigram_nll_frame(spark, sf_dir):
-    return _session_materialized(
-        _BIGRAM_NLL_CACHE, spark, sf_dir,
-        lambda: _bigram_nll_plan(spark, sf_dir),
-    )
+    return SC.materialized(
+        "bigram_nll", spark, sf_dir, ("documents",),
+        _checkpointed(lambda: _bigram_nll_plan(spark, sf_dir)),
+    )[0]
 
 
 def _bigram_nll_plan(spark, sf_dir):
@@ -7781,21 +7534,20 @@ def dup_span_stats_documents(spark, sf_dir):
 # incremental_dedup, minhash_est_error) all start from the SAME MinHash-LSH
 # candidate set and were each recomputing the full signature+banding
 # pipeline (~1.3-1.5 s of identical work per query at sf0.1). Materialize it
-# once per (session, sf_dir) — r11 opt, the _neardup_cc/_shingle_pairs
-# precedent; all six consumers are in bench SESSION_CACHED so warm re-draws
-# can't fake the build away. The registered minhash_lsh_candidates_documents
-# query itself stays fresh-computing: it is in the bench HEADLINE set, where
-# a session-warm frame would hollow out its best-of-3 draws.
-_LSH_EDGES_CACHE: dict = {}
-
-
+# once per session, as _neardup_cc/_shingle_pairs do; all six consumers are
+# in bench SESSION_CACHED so warm re-draws can't fake the build away. The
+# registered minhash_lsh_candidates_documents query itself stays
+# fresh-computing: it is in the bench HEADLINE set, where a session-warm
+# frame would hollow out its best-of-3 draws.
 def _lsh_candidates(spark, sf_dir):
     """The full registered candidate output (id_a, id_b, est_jaccard),
     session-materialized; minhash_est_error consumes the estimate column."""
-    return _session_materialized(
-        _LSH_EDGES_CACHE, spark, sf_dir,
-        lambda: REGISTRY["minhash_lsh_candidates_documents"].spark(spark, sf_dir),
-    )
+    return SC.materialized(
+        "lsh_candidates", spark, sf_dir, ("documents",),
+        _checkpointed(
+            lambda: REGISTRY["minhash_lsh_candidates_documents"].spark(spark, sf_dir)
+        ),
+    )[0]
 
 
 def _lsh_edges(spark, sf_dir):
@@ -8373,12 +8125,11 @@ def winsorize_value_events(spark, sf_dir):
 
 
 # The doc-level curation signal triple (quality keep, bigram NLL, dup-span
-# fraction) joined on doc_id — materialized once per (session, sf_dir) and
-# shared by curriculum_documents and source_quality_profile_documents, each
-# of which previously replayed all three signal plans (the bigram LM alone
+# fraction) joined on doc_id — materialized once per session and shared
+# by curriculum_documents and source_quality_profile_documents, each of
+# which would otherwise replay all three signal plans (the bigram LM alone
 # is a corpus pass + a (w1,w2) shuffle). Narrow frame: 4 columns at corpus
 # cardinality.
-_DOC_SIGNALS_CACHE: dict = {}
 
 
 def _doc_signals(spark, sf_dir):
@@ -8392,7 +8143,9 @@ def _doc_signals(spark, sf_dir):
         )
         return qr.join(nll, "doc_id").join(ds, "doc_id")
 
-    return _session_materialized(_DOC_SIGNALS_CACHE, spark, sf_dir, plan)
+    return SC.materialized(
+        "doc_signals", spark, sf_dir, ("documents",), _checkpointed(plan)
+    )[0]
 
 
 

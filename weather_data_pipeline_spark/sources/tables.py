@@ -20,64 +20,40 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session_cache import memo
+
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-# Per-(session, sf_dir, table) DataFrame memo (r12, guide §1.2 applied to
-# the DRIVER): building one table frame costs 60-120 ms of driver-side work
-# (parquet footer/schema read + the NTZ→LTZ projection's py4j round trips)
-# and the registry pays it 1-3× per query — ~25-40 s across a 203-query
-# pass for frames that are bit-identical every time. DataFrames are
-# immutable, so handing the same lazy plan object back is semantically a
-# no-op: no data or results are cached, every action still scans parquet.
-# Keyed by applicationId (a restarted session rebuilds). A frame's plan
-# pins the file listing it was built from, so each entry stores it with
-# the table's `_table_fingerprint`, and a rewritten table (an upsert
-# replacing partition files) is rebuilt on the next load instead of
-# scanning files that are gone. Cleared wholesale if test churn grows the
-# map (bounded driver-side plan objects, same policy as _FPW_PLAN_MEMO).
-_TABLE_MEMO: dict = {}
-
-
-def _table_fingerprint(path: str) -> tuple:
-    """Sorted (path, size, mtime_ns) of every file under a table directory,
-    or of the path itself when it is one file: a driver-side stat that
-    changes whenever a file is written, replaced or removed."""
-    import os
-
-    if os.path.isdir(path):
-        paths = [os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs]
-    else:
-        paths = [path]
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-        except OSError:  # absent, or removed mid-walk: a later load sees it
-            continue
-        out.append((p, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` as a DataFrame, TIMESTAMP_NTZ columns
+    read as UTC TimestampType (see `_ntz_to_ltz`).
+
+    Building the frame costs 60-120 ms of driver work (parquet footer and
+    schema read, the NTZ→LTZ projection's py4j round trips), and the
+    registry asks for the same table 1-3 times per query. So the frame is
+    memoized per session (`session_cache.memo`): handing back the same
+    immutable lazy plan caches no data, and every action still scans
+    parquet.
+
+    Fingerprint contract: a frame's plan pins the file listing it was built
+    from, so the memo key carries `session_cache.table_fingerprint` of the
+    table — the sorted (path, size, mtime_ns) of every file under
+    ``{sf_dir}/{name}.parquet``. A write, replace or removal of any file
+    (an upsert rewriting a partition) changes it, and the next call builds
+    a fresh frame instead of one that scans files that are gone. The check
+    is a driver-side stat per call; a rewrite that keeps every file's
+    path, size and mtime_ns is not seen."""
     # oracle comparisons assume UTC wall-clock timestamps (DuckDB is
     # tz-naive); pin the session tz in case the caller's session isn't UTC
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import os
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
-    fingerprint = _table_fingerprint(f"{sf_dir}/{name}.parquet")
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None and hit[0] == fingerprint:
-        return hit[1]
-    if name == "events":
-        df = load_events(spark, sf_dir)
-    else:
-        df = _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    if len(_TABLE_MEMO) > 64:
-        _TABLE_MEMO.clear()
-    _TABLE_MEMO[key] = (fingerprint, df)
-    return df
+    def build():
+        if name == "events":
+            return load_events(spark, sf_dir)
+        return _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+
+    return memo("load_table", spark, sf_dir, (name,), build, params=(name,))
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int:
